@@ -2340,12 +2340,12 @@ object SparkEntry {
       val planes = AnnSearch.hyperplanes(dim = 64)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ann_clustered_b"
       AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 8)
-      // stats from the committed manifest (no scan); the probe-bucket union
-      // is computed column-side — only bucket ints reach the driver
-      val manifest = AnnSearch.loadManifest(s, tmp)
+      // file spans from the committed manifest (no scan); the probe-bucket
+      // union is computed column-side — only bucket ints reach the driver
+      val entries = graft.sources.LayoutManifest.committed(s, tmp).files
       val qs = embs.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      AnnSearch.searchClusteredBatch(s, manifest, col("vec_id").cast("string"),
+      AnnSearch.searchClusteredBatch(s, tmp, entries, col("vec_id").cast("string"),
           col("embedding"), qs, planes, k = 5, probeRadius = 2)
         .select(col("query_id"), col("rank"), col("id"), round(col("score"), 6).as("score"))
         .orderBy("query_id", "rank")
@@ -2461,8 +2461,8 @@ object SparkEntry {
       val li = graft.sources.Testdata.table(s, dir, "lineitem")
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_layout_zorder"
       Layout.zorderWrite(li, "l_partkey", "l_suppkey", tmp, numFiles = 8)
-      val manifest = Layout.zoneMap(s, tmp, Seq("l_partkey", "l_suppkey"))
-      Layout.prunedRead(s, manifest, "l_partkey", 100L, 300L)
+      val zones = Layout.zoneMap(s, tmp, Seq("l_partkey", "l_suppkey"))
+      Layout.prunedRead(s, tmp, zones, "l_partkey", 100L, 300L)
         .filter(col("l_partkey").between(100, 300))
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
         // (orderkey, linenumber) is NOT unique in the synthetic lineitem —

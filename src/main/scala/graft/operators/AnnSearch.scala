@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.LayoutManifest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -123,20 +124,14 @@ object AnnSearch {
   /** Deterministic 64-bit fingerprint of a plane matrix (order-sensitive
     * fold over the raw double bits) — persisted in the layout manifest at
     * [[clusteredWrite]] time so operations that must agree with the
-    * write-time planes ([[deleteVectors]], [[searchClustered]]) can detect
+    * write-time planes ([[deleteVectors]], [[searchClusteredAt]]) can detect
     * a caller passing DIFFERENT planes (count, seed, or values) and fail
     * loudly instead of silently pruning the wrong files.
     */
-  def planesHash(planes: Seq[Seq[Double]]): String = {
-    var h = 0xcbf29ce484222325L // FNV offset basis
-    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    mix(planes.length.toLong)
-    planes.foreach { p =>
-      mix(p.length.toLong)
-      p.foreach(d => mix(java.lang.Double.doubleToLongBits(d)))
-    }
-    java.lang.Long.toHexString(h)
-  }
+  def planesHash(planes: Seq[Seq[Double]]): String =
+    LayoutManifest.fingerprint(Iterator(planes.length.toLong) ++
+      planes.iterator.flatMap(p => Iterator(p.length.toLong) ++
+        p.iterator.map(java.lang.Double.doubleToLongBits)))
 
   /** Persist a vector table CLUSTERED by its LSH bucket: range-partitioned
     * and sorted on `bucket`, so each parquet file covers a contiguous
@@ -164,40 +159,6 @@ object AnnSearch {
         "planes_hash" -> planesHash(planes)))
   }
 
-  /** The committed layout's per-file bucket-span stats as the zone-map
-    * DataFrame shape [[searchClustered]]/[[searchClusteredBatch]] consume —
-    * resolved from the manifest, NO scan (vs `Layout.zoneMap`, which
-    * aggregates over the data files).
-    */
-  def loadManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $path — was this layout written by clusteredWrite?"))
-    graft.sources.LayoutManifest.statsDf(spark, path, m, Seq("bucket"))
-  }
-
-  /** Fail-loudly guard: when `path` carries a committed manifest with a
-    * plane fingerprint, the caller's planes must match it — a delete or
-    * probe computed from DIFFERENT planes names the wrong buckets, prunes
-    * the wrong files, and silently misses rows. Layouts without a manifest
-    * (pre-protocol) pass through unchecked, as before.
-    */
-  private def validatePlanes(spark: org.apache.spark.sql.SparkSession,
-      path: String, planes: Seq[Seq[Double]]): Unit =
-    graft.sources.LayoutManifest.current(spark, path).foreach { m =>
-      m.props.get("planes_hash").foreach { want =>
-        val got = planesHash(planes)
-        require(got == want,
-          s"plane mismatch at $path: layout was written with planes_n=" +
-            s"${m.props.getOrElse("planes_n", "?")} hash=$want, caller " +
-            s"passed planes_n=${planes.length} hash=$got — operating with " +
-            "different planes would prune the wrong files (tombstones " +
-            "would silently survive). Rebuild with rebuildClustered or " +
-            "pass the write-time planes.")
-      }
-    }
-
   /** [[search]] over a [[clusteredWrite]] layout: the multiprobe set
     * prunes FILES via the zone-map manifest before any task is scheduled
     * ([[graft.sources.Layout.prunedReadIn]] — membership prune, since xor
@@ -206,10 +167,13 @@ object AnnSearch {
     * to [[search]] on the full in-memory index at the same dials; the
     * scanned fraction is the probed files' share of the layout
     * (→ probes/2^b of the corpus as file count grows with data).
+    * `entries` are the layout's file entries with `bucket` spans (the
+    * committed manifest's, or `Layout.zoneMap(spark, path, Seq("bucket"))`).
     */
   def searchClustered(
       spark: org.apache.spark.sql.SparkSession,
-      manifest: DataFrame,      // Layout.zoneMap(spark, path, Seq("bucket"))
+      path: String,
+      entries: Seq[LayoutManifest.FileEntry],
       id: Column,
       vec: Column,
       query: Seq[Float],
@@ -219,7 +183,7 @@ object AnnSearch {
     val qb = bucketOf(query, planes)
     val probes = probeBuckets(qb, planes.length, probeRadius)
     graft.sources.Layout
-      .prunedReadIn(spark, manifest, "bucket", probes.map(_.toLong))
+      .prunedReadIn(spark, path, entries, "bucket", probes.map(_.toLong))
       .filter(col("bucket").isin(probes: _*)) // zone maps prune files, not rows
       .withColumn("score", VF.cosine(vec, typedLit(query)))
       .select(id.as("id"), col("score"))
@@ -227,10 +191,10 @@ object AnnSearch {
       .limit(k)
   }
 
-  /** [[searchClustered]] against a [[clusteredWrite]] PATH: manifest stats
-    * and plane validation resolved from the committed layout — the no-scan
-    * probe read a deployment calls (zone spans come from the manifest, the
-    * plane fingerprint is checked against the write-time identity).
+  /** [[searchClustered]] against a [[clusteredWrite]] PATH: ONE read of
+    * the committed manifest supplies both the plane fingerprint check and
+    * the file spans, so a rebuild committed mid-call can never pass
+    * validation on the old planes and then prune the new layout.
     */
   def searchClusteredAt(
       spark: org.apache.spark.sql.SparkSession,
@@ -241,9 +205,9 @@ object AnnSearch {
       planes: Seq[Seq[Double]],
       k: Int = 5,
       probeRadius: Int = 1): DataFrame = {
-    validatePlanes(spark, path, planes)
-    searchClustered(spark, loadManifest(spark, path), id, vec, query, planes,
-      k, probeRadius)
+    val m = LayoutManifest.committed(spark, path)
+    LayoutManifest.requireIdentity(m, path, "planes_hash", planesHash(planes), "plane")
+    searchClustered(spark, path, m.files, id, vec, query, planes, k, probeRadius)
   }
 
   /** GDPR forget for a [[clusteredWrite]] index: delete the tombstoned
@@ -261,23 +225,25 @@ object AnnSearch {
     * the CALLER's planes — if those differ from the write-time planes, the
     * tombstoned rows sit in files the prune skips and SURVIVE the forget
     * with no error. On a manifest-committed layout the write-time plane
-    * fingerprint is validated first and a mismatch throws.
+    * fingerprint is validated first, against the same manifest version the
+    * prune then reads, and a mismatch throws.
     */
   def deleteVectors(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       idColName: String,
       tombstones: DataFrame,    // (id, embedding) — a bounded forget batch
-      planes: Seq[Seq[Double]],
-      knownManifest: Option[DataFrame] = None): (Int, Int, Long) = {
-    validatePlanes(spark, path, planes)
+      planes: Seq[Seq[Double]]): (Int, Int, Long) = {
+    val snapshot = graft.sources.Layout.snapshotOf(spark, path, "bucket")
+    LayoutManifest.requireIdentity(snapshot, path, "planes_hash",
+      planesHash(planes), "plane")
     val tsId = tombstones.columns.head
     val tsVec = tombstones.columns(1)
     val buckets = tombstones
       .select(bucketCol(col(tsVec), planes).as("b")).distinct()
       .collect().map(_.getInt(0).toLong).toSeq
-    graft.sources.Layout.deleteRowsIn(spark, path, "bucket", buckets,
-      idColName, tombstones.select(col(tsId)), knownManifest)
+    graft.sources.Layout.deleteRowsIn(spark, path, snapshot, "bucket", buckets,
+      idColName, tombstones.select(col(tsId)))
   }
 
   /** Approximate top-k: prune to the probe buckets (Hamming ≤ probeRadius
@@ -357,7 +323,8 @@ object AnnSearch {
     */
   def searchClusteredBatch(
       spark: org.apache.spark.sql.SparkSession,
-      manifest: DataFrame,      // Layout.zoneMap(spark, path, Seq("bucket"))
+      path: String,
+      entries: Seq[LayoutManifest.FileEntry], // as in searchClustered
       id: Column,
       vec: Column,
       queries: DataFrame,       // (query_id, query_vec) — a BOUNDED batch
@@ -372,7 +339,7 @@ object AnnSearch {
       .distinct()
       .collect().map(_.getLong(0)).toSeq
     val pruned = graft.sources.Layout
-      .prunedReadIn(spark, manifest, "bucket", probeUnion)
+      .prunedReadIn(spark, path, entries, "bucket", probeUnion)
     searchBatch(pruned, id, vec, queries, planes, k, probeRadius)
   }
 
@@ -415,7 +382,7 @@ object AnnSearch {
       vecColName: String,
       newPlanes: Seq[Seq[Double]],
       numFiles: Int): (Int, Int) = {
-    val live = graft.sources.LayoutManifest.readData(spark, path)
+    val live = LayoutManifest.readData(spark, path)
       .drop("bucket")
     val rebuilt = index(live, col(vecColName), newPlanes)
       .repartitionByRange(numFiles, col("bucket"))
@@ -440,10 +407,7 @@ object AnnSearch {
       seed: Long = 0xA11CE5L,
       targetOccupancy: Long = 256,
       rowsPerFile: Long = 1000000L): Seq[Seq[Double]] = {
-    val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $path — rebuild needs the live file set"))
-    val n = m.totalRows
+    val n = LayoutManifest.committed(spark, path).totalRows
     val newPlanes = hyperplanes(dim, planesFor(n, targetOccupancy), seed)
     val numFiles = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
     rebuildClustered(spark, path, vecColName, newPlanes, numFiles)

@@ -395,62 +395,13 @@ object Dedup {
     else containmentPairs(docs, id, text, n, tau, minShingles)
   }
 
-  /** Exact Jaccard pairs, BITSET strategy — for the dense-small-vocabulary
-    * regime (template/log-like corpora) where nearly every pair shares
-    * shingles, so candidate pruning cannot help and the O(n²) pair space is
-    * output-bound anyway. The right plan there is to make the per-pair
-    * kernel free: encode each doc's shingle set as a bitmask over the
-    * (small, driver-collected) vocabulary and compute |A∩B| as a fused
-    * AND+popcount loop ([[graft.functions.PopcountAndExpr]]).
-    *
-    * Requires |vocab| ≤ 2^20 by construction (the dictionary rides the task
-    * closure); for larger vocabularies use the prefix-filter or MinHash
-    * strategies — this trio is the cost-based-choice story, see
-    * [[jaccardPairs]].
-    */
-  def jaccardPairsBitset(
-      docs: DataFrame,
-      id: Column,
-      text: Column,
-      n: Int = 2,
-      tau: Double = 0.5): DataFrame = {
-    val sh = docs.select(id.as("id"), shingles(text, n).as("sh"))
-      .withColumn("sz", size(col("sh")))
-      .filter(col("sz") > 0)
-    val vocab = sh.select(explode(col("sh")).as("s")).distinct()
-      .orderBy("s").collect().map(_.getString(0))
-    require(vocab.length <= (1 << 20),
-      s"bitset strategy needs a small vocabulary, got ${vocab.length} shingles")
-    val dict = vocab.zipWithIndex.toMap
-    val nWords = math.max(1, (vocab.length + 63) / 64)
-    // native codegen kernel (no UDF serialization boundary); the dictionary
-    // rides the expression as a reference object, same footprint as a closure
-    val dictMask = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.DictMaskExpr(
-        org.apache.spark.sql.graft.Bridge.expression(col("sh")), dict, nWords))
-    val t = sh.select(col("id"), col("sz"), dictMask.as("mask"))
-    val inter = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.PopcountAndExpr(
-        org.apache.spark.sql.graft.Bridge.expression(col("a.mask")),
-        org.apache.spark.sql.graft.Bridge.expression(col("b.mask"))))
-    // length filter (J ≥ τ ⇒ τ·|B| ≤ |A| and τ·|A| ≤ |B|) inside the join
-    // condition prunes size-incompatible pairs before any row is emitted;
-    // the pair space is enumerated by the grid equi-join, not a cartesian
-    gridSelfJoin(t,
-        col("a.sz") >= lit(tau) * col("b.sz") &&
-          col("b.sz") >= lit(tau) * col("a.sz"))
-      .withColumn("inter", inter)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("a.sz") + col("b.sz") - col("inter")))
-      .filter(col("jaccard") >= tau)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("jaccard"))
-  }
-
-  /** Vocabulary-free variant of [[jaccardPairsBitset]]: shingles hash into a
-    * fixed `bits`-wide space (fingerprint mod bits), so there is NO
-    * driver-collected dictionary — the piece of the exact-vocab strategy
-    * that cannot scale (a 100 TB corpus's shingle vocabulary neither fits in
-    * nor belongs on the driver).
+  /** Exact Jaccard pairs, hashed BITSET strategy — for the dense-vocabulary
+    * regime where nearly every pair shares shingles, so candidate pruning
+    * cannot help and the per-pair kernel must be free: a fused AND+popcount
+    * over bitmasks ([[graft.functions.PopcountAndExpr]]). Shingles hash into
+    * a fixed `bits`-wide space (fingerprint mod bits), so there is NO
+    * driver-collected dictionary (a 100 TB corpus's shingle vocabulary
+    * neither fits in nor belongs on the driver).
     *
     * Soundness: for a pair (A, B) with per-doc collision losses
     * `coll = |shingles| − popcount(mask)`, the hashed intersection obeys

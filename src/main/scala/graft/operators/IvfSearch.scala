@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.LayoutManifest
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -150,34 +151,10 @@ object IvfSearch {
     * the wrong lists). Same FNV fold as
     * [[graft.operators.AnnSearch.planesHash]].
     */
-  def centroidsHash(centroids: Seq[Centroid]): String = {
-    var h = 0xcbf29ce484222325L
-    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    mix(centroids.length.toLong)
-    centroids.foreach { c =>
-      mix(c.cid)
-      c.vec.foreach(d => mix(java.lang.Double.doubleToLongBits(d)))
-    }
-    java.lang.Long.toHexString(h)
-  }
-
-  /** Fail-loudly guard for manifest-committed IVF layouts: the caller's
-    * centroids must match the write-time fingerprint. Pre-protocol layouts
-    * (no manifest) pass unchecked.
-    */
-  private def validateCentroids(spark: SparkSession, path: String,
-      centroids: Seq[Centroid]): Unit =
-    graft.sources.LayoutManifest.current(spark, path).foreach { m =>
-      m.props.get("centroids_hash").foreach { want =>
-        val got = centroidsHash(centroids)
-        require(got == want,
-          s"centroid mismatch at $path: layout was written with ivf_c=" +
-            s"${m.props.getOrElse("ivf_c", "?")} hash=$want, caller passed " +
-            s"c=${centroids.length} hash=$got — probing with different " +
-            "centroids reads the wrong inverted lists. Rebuild with " +
-            "rebuildClustered or pass the write-time centroids.")
-      }
-    }
+  def centroidsHash(centroids: Seq[Centroid]): String =
+    LayoutManifest.fingerprint(Iterator(centroids.length.toLong) ++
+      centroids.iterator.flatMap(c => Iterator(c.cid) ++
+        c.vec.iterator.map(java.lang.Double.doubleToLongBits)))
 
   /** Rebuild-and-cutover for an IVF [[clusteredWrite]] layout — the
     * quantizer-drift answer (previously documented as "offline
@@ -197,7 +174,7 @@ object IvfSearch {
       c: Int,
       trainIters: Int = 0,
       numFiles: Int = 8): Seq[Centroid] = {
-    val live = graft.sources.LayoutManifest.readData(spark, path)
+    val live = LayoutManifest.readData(spark, path)
       .drop("list_id")
     val cents =
       if (trainIters <= 0) centroidsFromIds(live, col(idColName), col(vecColName), c)
@@ -212,14 +189,16 @@ object IvfSearch {
   }
 
   /** [[search]] over a [[clusteredWrite]] layout: the nprobe nearest lists
-    * prune FILES via the zone-map manifest
-    * ([[graft.sources.Layout.prunedReadIn]]) before any task is scheduled;
+    * prune FILES by the `list_id` spans in `entries` (the committed
+    * manifest's, or `Layout.zoneMap(spark, path, Seq("list_id"))`) via
+    * [[graft.sources.Layout.prunedReadIn]] before any task is scheduled;
     * the same exact cosine + top-k runs inside the probed lists, so results
     * equal [[search]] on the full in-memory index at the same dials.
     */
   def searchClustered(
-      spark: org.apache.spark.sql.SparkSession,
-      manifest: DataFrame,      // Layout.zoneMap(spark, path, Seq("list_id"))
+      spark: SparkSession,
+      path: String,
+      entries: Seq[LayoutManifest.FileEntry],
       id: Column,
       vec: Column,
       query: Seq[Float],
@@ -227,7 +206,7 @@ object IvfSearch {
       k: Int = 5,
       nprobe: Int = 4): DataFrame = {
     val probes = probeLists(query, centroids, nprobe)
-    graft.sources.Layout.prunedReadIn(spark, manifest, "list_id", probes)
+    graft.sources.Layout.prunedReadIn(spark, path, entries, "list_id", probes)
       .filter(col("list_id").isin(probes: _*)) // zone maps prune files, not rows
       .withColumn("score", VF.cosine(vec, typedLit(query)))
       .select(id.as("id"), col("score"))
@@ -235,9 +214,9 @@ object IvfSearch {
       .limit(k)
   }
 
-  /** [[searchClustered]] against a [[clusteredWrite]] PATH: list-span stats
-    * resolved from the committed manifest (no scan) and the caller's
-    * centroids validated against the write-time fingerprint.
+  /** [[searchClustered]] against a [[clusteredWrite]] PATH: ONE read of
+    * the committed manifest supplies both the centroid fingerprint check
+    * and the list spans, so validation and prune see the same version.
     */
   def searchClusteredAt(
       spark: SparkSession,
@@ -248,13 +227,10 @@ object IvfSearch {
       centroids: Seq[Centroid],
       k: Int = 5,
       nprobe: Int = 4): DataFrame = {
-    validateCentroids(spark, path, centroids)
-    val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $path — was this layout written by clusteredWrite?"))
-    searchClustered(spark,
-      graft.sources.LayoutManifest.statsDf(spark, path, m, Seq("list_id")),
-      id, vec, query, centroids, k, nprobe)
+    val m = LayoutManifest.committed(spark, path)
+    LayoutManifest.requireIdentity(m, path, "centroids_hash",
+      centroidsHash(centroids), "centroid")
+    searchClustered(spark, path, m.files, id, vec, query, centroids, k, nprobe)
   }
 
   /** ONE Lloyd (k-means) update round surfaced as a DataFrame: assign every

@@ -20,14 +20,16 @@ import org.apache.spark.sql.functions._
   *    pure column algebra (integer scale + shift/mask interleave —
   *    codegen'd, no UDF), and the layout job is ONE range exchange, the
   *    same cost as any global sort.
-  *  - ZONE MAP: per-file min/max stats collected in one column-pruned
-  *    aggregate over `_metadata.file_path` (only the stat columns are
-  *    read). Parquet footers already hold these stats, but Spark consults
-  *    them per-task AFTER scheduling; a manifest consulted at PLANNING
-  *    time schedules no task at all for a pruned file — at 100 TB /
-  *    ~100k files the difference between a 3-file job and a 100k-task
-  *    job whose tasks mostly read a footer and exit. The manifest is tiny
-  *    (one row per file) and rebuilt incrementally per written partition.
+  *  - ZONE MAP: per-file min/max stats as [[LayoutManifest.FileEntry]]
+  *    values — read from parquet footers, or one column-pruned aggregate
+  *    over `_metadata.file_path` when the footers cannot answer. Spark
+  *    consults footer stats per-task AFTER scheduling; entries consulted
+  *    on the driver at PLANNING time schedule no task at all for a pruned
+  *    file — at 100 TB / ~100k files the difference between a 3-file job
+  *    and a 100k-task job whose tasks mostly read a footer and exit. The
+  *    entries are tiny (one per file), live in the committed
+  *    [[LayoutManifest]], and every commit adds entries for just its new
+  *    files.
   *  - COMPACTION: streaming ingest and fine-grained writes leave files far
   *    below the scan's `maxPartitionBytes`, and task-scheduling overhead
   *    then dominates reads. Compaction bin-packs by TOTAL BYTES (not file
@@ -106,60 +108,30 @@ object Layout {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Zone-map manifest: one row per data file with min/max of each stat
-    * column. One aggregate over the hidden `_metadata.file_path` column;
-    * only `statCols` are read (column pruning), and the map-side combine
-    * means one partial row per (task x file) crosses the exchange.
+  /** Zone map of a plain parquet directory: one [[LayoutManifest.FileEntry]]
+    * per data file with the min/max span of each stat column — the same
+    * footer-or-scan stats pass a manifest commit runs
+    * ([[LayoutManifest.entriesFor]]). Names are relative to `path`.
     */
-  def zoneMap(spark: SparkSession, path: String, statCols: Seq[String]): DataFrame = {
-    // Footer fast path (round-9): identical spans straight from parquet
-    // metadata when every stat column is a plain int — no scan job. The
-    // scan aggregation remains the exact fallback for partitioned layouts
-    // and non-integer columns (see LayoutManifest.entriesFor).
-    LayoutManifest.footerEntries(spark, Seq(path), statCols) match {
-      case Some(entries) if entries.forall(e => statCols.forall(e.stats.contains)) =>
-        LayoutManifest.statsDf(spark, path, LayoutManifest.Manifest(
-          -1L, Map.empty, entries), statCols)
-      case _ =>
-        val df = spark.read.parquet(path)
-        df.select(col("_metadata.file_path").as("file") +: statCols.map(col): _*)
-          .groupBy("file")
-          .agg(min(col(statCols.head)).as(s"${statCols.head}_min"),
-               max(col(statCols.head)).as(s"${statCols.head}_max") +:
-               statCols.tail.flatMap(c =>
-                 Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"))): _*)
-    }
-  }
+  def zoneMap(spark: SparkSession, path: String,
+      statCols: Seq[String]): Seq[LayoutManifest.FileEntry] =
+    LayoutManifest.entriesFor(spark, Seq(path), statCols)
 
   /** Planning-time file pruning: keep only files whose [min, max] span
     * intersects [lo, hi] (a file may still contain no matching row — the
     * zone map has no false negatives, like any bloom/minmax skip index),
-    * then read exactly those files. The manifest is one row per file, so
-    * the prune itself is a driver-side filter over a tiny collect; no task
-    * is ever scheduled for a skipped file. Callers re-apply the row-level
-    * predicate: zone maps prune FILES, not rows. A file with NULL bounds
-    * (span unknown — e.g. a manifest entry written without stats for this
-    * column) is KEPT: pruning may never produce a false negative.
+    * then read exactly those files. The selection is a driver-side filter
+    * over the layout's entries and launches no job; no task is ever
+    * scheduled for a skipped file. Callers re-apply the row-level
+    * predicate: zone maps prune FILES, not rows. A file with no span for
+    * `statCol` (stats unknown) is KEPT: pruning may never produce a false
+    * negative.
     */
-  def prunedRead(spark: SparkSession, manifest: DataFrame, statCol: String,
-                 lo: Long, hi: Long): DataFrame = {
-    val mn = col(s"${statCol}_min"); val mx = col(s"${statCol}_max")
-    val rows = manifest
-      .select(col("file"), ((mn <= hi && mx >= lo) ||
-        mn.isNull || mx.isNull).as("keep"))
-      .collect()
-    require(rows.nonEmpty, "prunedRead over an EMPTY manifest — the layout " +
-      "lists no files (zoneMap over a dir with no parquet, or a manifest " +
-      "committed with zero entries)")
-    val files = rows.filter(_.getBoolean(1)).map(_.getString(0))
-    if (files.isEmpty) {
-      // every file pruned: empty result, schema taken from one file's
-      // footer (a metadata-only read — no data task runs)
-      val any = rows.head.getString(0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(any).schema)
-    } else spark.read.parquet(files.toIndexedSeq: _*)
-  }
+  def prunedRead(spark: SparkSession, path: String,
+      entries: Seq[LayoutManifest.FileEntry], statCol: String,
+      lo: Long, hi: Long): DataFrame =
+    readFiles(spark, path, entries, entries.filter(_.stats.get(statCol)
+      .forall { case (mn, mx) => mn <= hi && mx >= lo }))
 
   /** Membership prune: keep files whose [min, max] span contains at least
     * one of `values` — the probe-read primitive for bucket-clustered
@@ -167,101 +139,115 @@ object Layout {
     * radius-r multiprobe set is ~1+b+C(b,2) SCATTERED bucket ids, not an
     * interval (a [min(values), max(values)] range prune would keep nearly
     * every file, since xor-neighbor buckets span the whole id space).
-    * Same contract as [[prunedRead]]: driver-side over the one-row-per-
-    * file manifest (binary search per file span), no false negatives,
-    * callers re-apply the row-level predicate.
+    * Same contract as [[prunedRead]].
     */
-  def prunedReadIn(spark: SparkSession, manifest: DataFrame, statCol: String,
-                   values: Seq[Long]): DataFrame = {
-    val rows = manifest.select("file").collect()
-    require(rows.nonEmpty, "prunedReadIn over an EMPTY manifest — the " +
-      "layout lists no files")
-    val files = filesSpanning(manifest, statCol, values)
-    if (files.isEmpty) {
-      val any = rows.head.getString(0)
+  def prunedReadIn(spark: SparkSession, path: String,
+      entries: Seq[LayoutManifest.FileEntry], statCol: String,
+      values: Seq[Long]): DataFrame =
+    readFiles(spark, path, entries, filesSpanning(entries, statCol, values))
+
+  /** The tail both prunes share: read the `kept` entries, or — when every
+    * file was pruned — an empty frame with the schema of one file's footer
+    * (a metadata-only read, no data task runs).
+    */
+  private def readFiles(spark: SparkSession, path: String,
+      entries: Seq[LayoutManifest.FileEntry],
+      kept: Seq[LayoutManifest.FileEntry]): DataFrame = {
+    require(entries.nonEmpty, "pruned read over an EMPTY manifest — the " +
+      "layout lists no files (zoneMap over a dir with no parquet, or a " +
+      "manifest committed with zero entries)")
+    if (kept.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(any).schema)
-    } else spark.read.parquet(files.toIndexedSeq: _*)
+        spark.read.parquet(LayoutManifest.dataPath(path, entries.head.name)).schema)
+    else spark.read.parquet(kept.map(e => LayoutManifest.dataPath(path, e.name)): _*)
   }
 
-  /** Files whose [min, max] span of `statCol` contains at least one of
+  /** Entries whose [min, max] span of `statCol` contains at least one of
     * `values` — the driver-side membership prune shared by
     * [[prunedReadIn]] and [[deleteRowsIn]] (binary search per file span
-    * over the sorted value set). A NULL span (stats unknown for this
-    * column) keeps the file: the prune may never claim a value is absent
+    * over the sorted value set). An entry with no span for the column
+    * (stats unknown) is kept: the prune may never claim a value is absent
     * from a file it knows nothing about.
     */
-  private def filesSpanning(manifest: DataFrame, statCol: String,
-      values: Seq[Long]): Array[String] = {
+  private[graft] def filesSpanning(entries: Seq[LayoutManifest.FileEntry],
+      statCol: String, values: Seq[Long]): Seq[LayoutManifest.FileEntry] = {
     val sorted = values.distinct.sorted.toArray
-    def spanHasValue(lo: Long, hi: Long): Boolean = {
+    entries.filter(_.stats.get(statCol).forall { case (lo, hi) =>
       var i = java.util.Arrays.binarySearch(sorted, lo)
       if (i < 0) i = -i - 1 // insertion point: first value >= lo
       i < sorted.length && sorted(i) <= hi
-    }
-    manifest
-      .select(col("file"), col(s"${statCol}_min").cast("long"),
-        col(s"${statCol}_max").cast("long"))
-      .collect()
-      .filter(r => r.isNullAt(1) || r.isNullAt(2) ||
-        spanHasValue(r.getLong(1), r.getLong(2)))
-      .map(_.getString(0))
+    })
   }
 
-  /** Layout-health audit over a zone-map manifest — the "has my
-    * clustering decayed?" gate that decides when to re-run
-    * [[compact]]/[[zorderWrite]]: per-file span statistics of `statCol`
-    * as fractions of the global range (avg + max), plus the number of
-    * OVERLAPPING span pairs. A freshly range-clustered layout reads
-    * near-zero overlap and span fractions ~1/F; a hash-scattered or
-    * update-churned layout reads span fractions ~1 and ~C(F,2) overlaps —
-    * the regime where every [[prunedRead]]/[[deleteRows]] degrades toward
-    * a full scan or rewrite. The manifest is one row per file, so the
-    * overlap self-join is F²-bounded manifest-scale work, never corpus
-    * work. Returns ONE row: `(n_files, span_frac_avg, span_frac_max,
-    * overlap_pairs)`; a single-point global range reads fractions 0.
+  /** [[manifestStats]]' result: the file count, per-file span of the stat
+    * column as a fraction of the global range (avg and max, rounded to 6
+    * places), and the number of overlapping span pairs.
+    */
+  final case class LayoutHealth(nFiles: Long, spanFracAvg: Double,
+      spanFracMax: Double, overlapPairs: Long)
+
+  /** Layout-health audit over a zone map — the "has my clustering
+    * decayed?" gate that decides when to re-run [[compact]]/[[zorderWrite]]:
+    * per-file span statistics of `statCol` as fractions of the global range
+    * (avg + max), plus the number of OVERLAPPING span pairs. A freshly
+    * range-clustered layout reads near-zero overlap and span fractions
+    * ~1/F; a hash-scattered or update-churned layout reads span fractions
+    * ~1 and ~C(F,2) overlaps — the regime where every
+    * [[prunedRead]]/[[deleteRows]] degrades toward a full scan or rewrite.
+    * Driver-side over the one-entry-per-file zone map, O(F log F); a
+    * single-point global range reads fractions 0, and entries with no span
+    * count as files but take no part in the fractions or overlaps.
     *
     * Spec-pinned rather than driver-oracled: the spans depend on Spark's
     * range-partitioner SAMPLING boundaries, which no SQL oracle can
     * replicate.
     */
-  def manifestStats(manifest: DataFrame, statCol: String): DataFrame = {
-    val lo = col(s"${statCol}_min").cast("double")
-    val hi = col(s"${statCol}_max").cast("double")
-    val g = manifest.agg(min(lo).as("glo"), max(hi).as("ghi"),
-      count(lit(1)).as("n_files"))
-    val spans = manifest.select(col("file"), lo.as("lo"), hi.as("hi"))
-    // Overlap-pair COUNT via an endpoint sweep instead of the former
-    // O(F²) theta self-join (BNLJ): sort the 2F interval endpoints (starts
-    // before ends at equal coordinate — spans are closed, touching counts),
-    // and at every start event add the number of currently-open intervals
-    // (= starts so far − ends so far, both over STRICTLY PRECEDING events).
-    // Each unordered overlapping pair is counted exactly once, at the
-    // later interval's start. O(F log F) — manifest-scale even at the
-    // 100k-file extrapolation where the join form was ~5·10⁹ pair tests.
-    // NULL spans never joined under the old form (NULL comparisons are
-    // false); the sweep drops them identically.
-    val ev = spans.filter(col("lo").isNotNull && col("hi").isNotNull)
-      .select(col("lo").as("x"), lit(0).as("t"))
-      .unionAll(spans.filter(col("lo").isNotNull && col("hi").isNotNull)
-        .select(col("hi").as("x"), lit(1).as("t")))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("x"), col("t"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val overlaps = ev
-      .withColumn("open",
-        coalesce(sum(when(col("t") === 0, 1L).otherwise(-1L)).over(w), lit(0L)))
-      .filter(col("t") === 0)
-      .agg(coalesce(sum(col("open")), lit(0L)).as("overlap_pairs"))
-    spans.crossJoin(broadcast(g))
-      .select(col("n_files"),
-        when(col("ghi") > col("glo"),
-          (col("hi") - col("lo")) / (col("ghi") - col("glo")))
-          .otherwise(lit(0.0)).as("frac"))
-      .groupBy("n_files")
-      .agg(round(avg(col("frac")), 6).as("span_frac_avg"),
-        round(max(col("frac")), 6).as("span_frac_max"))
-      .crossJoin(broadcast(overlaps))
+  def manifestStats(entries: Seq[LayoutManifest.FileEntry],
+      statCol: String): LayoutHealth = {
+    val spans = entries.flatMap(_.stats.get(statCol))
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val fracs =
+      if (spans.isEmpty) Seq.empty
+      else {
+        val glo = spans.map(_._1).min.toDouble
+        val ghi = spans.map(_._2).max.toDouble
+        spans.map { case (lo, hi) =>
+          if (ghi > glo) (hi.toDouble - lo.toDouble) / (ghi - glo) else 0.0 }
+      }
+    // Overlap-pair COUNT by an endpoint sweep: sort the 2F interval
+    // endpoints (starts before ends at equal coordinate — spans are closed,
+    // touching counts), and at every start add the number of currently
+    // open intervals. Each unordered overlapping pair is counted exactly
+    // once, at the later interval's start.
+    val events = (spans.map(s => (s._1, 0)) ++ spans.map(s => (s._2, 1))).sorted
+    var open = 0L; var pairs = 0L
+    events.foreach { case (_, t) =>
+      if (t == 0) { pairs += open; open += 1 } else open -= 1
+    }
+    LayoutHealth(entries.size.toLong,
+      if (fracs.isEmpty) 0.0 else round6(fracs.sum / fracs.size),
+      if (fracs.isEmpty) 0.0 else round6(fracs.max), pairs)
   }
+
+  /** The committed manifest at `path`, or — for a layout written before
+    * the manifest protocol — an uncommitted v0 bootstrapped from the
+    * directory with `statCol` stats, which the first rewrite commits.
+    */
+  def snapshotOf(spark: SparkSession, path: String,
+      statCol: String): LayoutManifest.Manifest =
+    LayoutManifest.current(spark, path)
+      .getOrElse(LayoutManifest.bootstrap(spark, path, Seq(statCol)))
+
+  /** `snapshot`'s entries with `statCol` spans: the manifest's own when it
+    * carries them, else one stats pass over exactly the snapshot's files.
+    */
+  private def entriesWith(spark: SparkSession, path: String,
+      snapshot: LayoutManifest.Manifest,
+      statCol: String): Seq[LayoutManifest.FileEntry] =
+    if (snapshot.files.exists(_.stats.contains(statCol))) snapshot.files
+    else LayoutManifest.entriesFor(spark,
+      snapshot.files.map(e => LayoutManifest.dataPath(path, e.name)), Seq(statCol))
 
   /** Targeted row deletion (the GDPR/right-to-be-forgotten shape):
     * rewrite ONLY the files whose zone-map [min, max] span can contain a
@@ -270,71 +256,41 @@ object Layout {
     * id-clustered layout — the full-table rewrite (or full anti-join
     * rewrite) this replaces is ~six orders of magnitude more IO.
     *
-    * Mechanics: per-file id spans from [[zoneMap]] (one manifest row per
-    * file) are range-joined to the tombstone set to pick affected files
-    * (zone maps have no false negatives, so unaffected files provably hold
-    * no tombstoned row); the affected files alone are read, anti-joined
-    * against the broadcast tombstones, and swapped in via the
-    * [[LayoutManifest]] commit protocol — new files are fully written and
-    * renamed in BEFORE the one-rename manifest commit makes them live, and
-    * the superseded files are deleted only AFTER it, so no crash point
-    * loses a surviving row and a concurrent manifest reader sees either
-    * the old or the new complete file set, never a mix.
+    * This is [[deleteRowsIn]] with the id column as the cluster column: the
+    * tombstone ids (a bounded forget batch) come to the driver and prune
+    * files by span membership over the [[snapshotOf]] the layout — the
+    * committed manifest (no stats scan), or a bootstrapped one.
     * Returns (filesTotal, filesRewritten, rowsDeleted).
     */
   def deleteRows(spark: SparkSession, path: String, idCol: String,
-                 tombstones: DataFrame,
-                 knownManifest: Option[DataFrame] = None): (Int, Int, Long) = {
-    val tsCol = tombstones.columns.head
-    // committed manifest first (no scan); else without a maintained zone
-    // map it is rebuilt here — one column-pruned scan of the whole table,
-    // the dominant cost of a small delete as the table grows. Production
-    // passes the incrementally maintained manifest (see
-    // Streaming.startZoneMapMaintenance) or commits one at write time
-    // (commitLayout) and the delete cost is then bounded by the affected
-    // files alone.
-    val snapshot = LayoutManifest.current(spark, path)
-      .getOrElse(LayoutManifest.bootstrap(spark, path, Seq(idCol)))
-    val manifest = knownManifest.getOrElse {
-      if (snapshot.files.exists(_.stats.contains(idCol)))
-        LayoutManifest.statsDf(spark, path, snapshot, Seq(idCol))
-      else zoneMap(spark, path, Seq(idCol))
-    }
-    val mn = col(s"${idCol}_min").cast("long")
-    val mx = col(s"${idCol}_max").cast("long")
-    val affected = manifest
-      .join(tombstones,
-        tombstones(tsCol).cast("long").between(mn, mx) ||
-          mn.isNull || mx.isNull, // unknown span: must be treated as affected
-        "left_semi")
-      .select("file").collect().map(_.getString(0))
-    rewriteWithout(spark, path, snapshot, affected, idCol, tombstones)
+                 tombstones: DataFrame): (Int, Int, Long) = {
+    val ids = tombstones.select(tombstones(tombstones.columns.head).cast("long"))
+      .collect().collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSeq
+    deleteRowsIn(spark, path, snapshotOf(spark, path, idCol), idCol, ids,
+      idCol, tombstones)
   }
 
   /** Targeted deletion on a layout CLUSTERED BY A DIFFERENT COLUMN than
     * the delete key — the ANN-index forget shape
     * ([[graft.operators.AnnSearch.deleteVectors]]): the index is clustered
     * by LSH `bucket`, tombstones are vector IDS, and on such a layout the
-    * id spans per file are near-total, so [[deleteRows]]'s range prune
-    * would rewrite everything. The caller resolves the tombstones'
-    * CLUSTER values (`clusterValues` — a pure function of the vector, or
-    * a lookup against the id-clustered primary store) and files are
-    * pruned by MEMBERSHIP of those values in each file's span; the
-    * rewrite then anti-joins on the true id column as usual.
+    * id spans per file are near-total, so an id-span prune would rewrite
+    * everything. The caller resolves the tombstones' CLUSTER values
+    * (`clusterValues` — a pure function of the vector, or a lookup against
+    * the id-clustered primary store) and files are pruned by MEMBERSHIP of
+    * those values in each file's span; the rewrite then anti-joins on the
+    * true id column as usual. `snapshot` is the layout's manifest
+    * ([[snapshotOf]]) — callers that validate its index identity first
+    * prune the same version they validated. The file selection launches
+    * no job.
     */
-  def deleteRowsIn(spark: SparkSession, path: String, clusterCol: String,
-                   clusterValues: Seq[Long], idCol: String,
-                   tombstones: DataFrame,
-                   knownManifest: Option[DataFrame] = None): (Int, Int, Long) = {
-    val snapshot = LayoutManifest.current(spark, path)
-      .getOrElse(LayoutManifest.bootstrap(spark, path, Seq(clusterCol)))
-    val manifest = knownManifest.getOrElse {
-      if (snapshot.files.exists(_.stats.contains(clusterCol)))
-        LayoutManifest.statsDf(spark, path, snapshot, Seq(clusterCol))
-      else zoneMap(spark, path, Seq(clusterCol))
-    }
-    val affected = filesSpanning(manifest, clusterCol, clusterValues)
-    rewriteWithout(spark, path, snapshot, affected, idCol, tombstones)
+  def deleteRowsIn(spark: SparkSession, path: String,
+      snapshot: LayoutManifest.Manifest, clusterCol: String,
+      clusterValues: Seq[Long], idCol: String,
+      tombstones: DataFrame): (Int, Int, Long) = {
+    val affected = filesSpanning(entriesWith(spark, path, snapshot, clusterCol),
+      clusterCol, clusterValues).map(e => LayoutManifest.dataPath(path, e.name))
+    rewriteWithout(spark, path, snapshot, affected.toArray, idCol, tombstones)
   }
 
   /** Shared delete mechanics under the [[LayoutManifest]] commit protocol.
@@ -630,9 +586,7 @@ object Layout {
     */
   def writeBloomSidecar(spark: SparkSession, path: String, colName: String,
       fpp: Double = 0.01): (Int, Int) = {
-    val m = LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"bloom sidecar needs a committed layout at $path — run commitLayout first"))
+    val m = LayoutManifest.committed(spark, path)
     writeSidecarDf(spark, path, m.version, colName,
       bloomsDf(spark, path, m.files, colName, fpp), m.files.size)
     graft.functions.Bloom.dims(math.max(1L, m.files.map(_.rows).max), fpp)
@@ -706,8 +660,7 @@ object Layout {
     */
   def bloomPrunedFiles(spark: SparkSession, path: String, colName: String,
       values: Seq[Long]): Array[String] = {
-    val m = LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $path"))
+    val m = LayoutManifest.committed(spark, path)
     val side = readSidecarDf(spark, path, m.version, colName).getOrElse(
       throw new IllegalStateException(
         s"no bloom sidecar for v${m.version}/$colName at $path — run " +
@@ -730,8 +683,7 @@ object Layout {
     */
   def deleteRowsBloom(spark: SparkSession, path: String, idCol: String,
       tombstones: DataFrame, fpp: Double = 0.01): (Int, Int, Long) = {
-    val snapshot = LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $path"))
+    val snapshot = LayoutManifest.committed(spark, path)
     val tsCol = tombstones.columns.head
     val ids = tombstones.select(tombstones(tsCol).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq
@@ -786,30 +738,24 @@ object Layout {
     * overlapping) trigger when pruning has lost roughly half its power —
     * early enough that the rewrite is amortized by the reads it saves, late
     * enough that steady appends don't thrash rewrites. A maintenance
-    * schedule calls this after every append wave; the no-op path costs one
-    * manifest-scale aggregate, no scan, when the layout carries a committed
-    * manifest with `statCol` stats.
+    * schedule calls this after every append wave; the no-op path is a
+    * driver-side pass over the manifest, no job, when the layout carries a
+    * committed manifest with `statCol` stats.
     */
   def maintainCompaction(spark: SparkSession, path: String, statCol: String,
       targetBytes: Long, spanFracAvgMax: Double = 0.5,
       overlapFracMax: Double = 0.25): CompactionDecision = {
-    val committed = LayoutManifest.current(spark, path)
-    val statsSrc = committed match {
-      case Some(m) if m.files.exists(_.stats.contains(statCol)) =>
-        LayoutManifest.statsDf(spark, path, m, Seq(statCol))
-      case _ => zoneMap(spark, path, Seq(statCol))
-    }
-    val s = manifestStats(statsSrc, statCol).head()
-    val nFiles = s.getLong(0)
-    val pairs = nFiles * (nFiles - 1) / 2
+    val h = manifestStats(
+      entriesWith(spark, path, snapshotOf(spark, path, statCol), statCol), statCol)
+    val pairs = h.nFiles * (h.nFiles - 1) / 2
     val overlapFrac =
-      if (pairs == 0) 0.0 else s.getLong(3).toDouble / pairs
-    val decayed = s.getDouble(1) > spanFracAvgMax || overlapFrac > overlapFracMax
+      if (pairs == 0) 0.0 else h.overlapPairs.toDouble / pairs
+    val decayed = h.spanFracAvg > spanFracAvgMax || overlapFrac > overlapFracMax
     val filesAfter =
       if (decayed)
         compactInPlace(spark, path, targetBytes, Some(statCol))._2
-      else nFiles.toInt
-    CompactionDecision(decayed, nFiles, s.getDouble(1), s.getDouble(2),
-      s.getLong(3), overlapFrac, filesAfter)
+      else h.nFiles.toInt
+    CompactionDecision(decayed, h.nFiles, h.spanFracAvg, h.spanFracMax,
+      h.overlapPairs, overlapFrac, filesAfter)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Versioned manifest commit protocol for the layout tier — the crash-safe
   * replacement for delete-then-rename swaps.
@@ -30,13 +31,13 @@ import scala.jdk.CollectionConverters._
   *
   * Contents: one entry per live data file (name, row count, per-column
   * min/max zone stats) plus a string property map. The zone stats make the
-  * manifest double as the planning-time prune index
-  * ([[Layout.prunedRead]]/[[Layout.prunedReadIn]] consume [[statsDf]]), so
-  * a probe read over a committed layout schedules ZERO scan tasks to
-  * discover file spans. The props carry index identity (LSH plane
-  * count/hash, IVF centroid hash) so a delete/search against a layout
-  * written with DIFFERENT dials fails loudly instead of silently missing
-  * rows ([[graft.operators.AnnSearch.deleteVectors]] validates).
+  * manifest double as the planning-time prune index: [[Layout.prunedRead]]
+  * and [[Layout.prunedReadIn]] filter the manifest's [[FileEntry]] list on
+  * the driver, so a probe read over a committed layout launches ZERO jobs
+  * to pick its files. The props carry index identity (LSH plane hash, IVF
+  * centroid hash) so a delete/search against a layout written with
+  * DIFFERENT dials fails loudly instead of silently missing rows
+  * ([[requireIdentity]]).
   *
   * Format: a tiny TSV (dependency-free, human-inspectable), one file per
   * version under `path/_graft/manifest-<version>.tsv`. The commit is the
@@ -75,6 +76,32 @@ object LayoutManifest {
       files.flatMap(_.stats.keys).distinct.sorted
   }
 
+  /** 64-bit FNV fold of `xs` as hex — the index identity fingerprint
+    * behind [[graft.operators.AnnSearch.planesHash]] and
+    * [[graft.operators.IvfSearch.centroidsHash]].
+    */
+  def fingerprint(xs: Iterator[Long]): String = {
+    var h = 0xcbf29ce484222325L // FNV offset basis
+    xs.foreach { x => h ^= x; h *= 0x100000001b3L }
+    java.lang.Long.toHexString(h)
+  }
+
+  /** Fail-loudly index identity guard: when `m` records `hashKey`, the
+    * caller's fingerprint `got` must equal it. A probe, delete or
+    * maintenance stream computed from DIFFERENT planes or centroids names
+    * the wrong buckets/lists, prunes the wrong files and silently misses
+    * rows. `what` names the dial in the message ("plane", "centroid").
+    */
+  def requireIdentity(m: Manifest, path: String, hashKey: String,
+      got: String, what: String): Unit =
+    m.props.get(hashKey).foreach { want =>
+      require(got == want,
+        s"$what mismatch at $path: layout was written with $hashKey=$want, " +
+          s"caller passed $got — operating with different ${what}s prunes " +
+          "the wrong files (reads miss rows, tombstones silently survive). " +
+          s"Rebuild with rebuildClustered or pass the write-time ${what}s.")
+    }
+
   private def fs(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
@@ -97,6 +124,12 @@ object LayoutManifest {
     if (versions.isEmpty) None
     else Some(read(f, new Path(dir, s"manifest-${versions.max}.tsv"), versions.max))
   }
+
+  /** [[current]], failing loudly when `path` has no committed manifest. */
+  def committed(spark: SparkSession, path: String): Manifest =
+    current(spark, path).getOrElse(throw new IllegalStateException(
+      s"no committed manifest at $path — write the layout with " +
+        "clusteredWrite or commitLayout first"))
 
   private def read(f: FileSystem, p: Path, version: Long): Manifest = {
     val in = f.open(p)
@@ -230,6 +263,11 @@ object LayoutManifest {
       statCols: Seq[String]): Seq[FileEntry] = {
     if (paths.isEmpty) return Seq.empty
     footerEntries(spark, paths, statCols).getOrElse {
+      // names relative to the layout dir: a bare name in a flat dir,
+      // `k=v/part-…` under a partitioned one (a file path names itself)
+      val f = fs(spark, paths.head)
+      val roots = paths.map(p => f.makeQualified(new Path(p)).toUri.getPath
+        .stripSuffix("/") + "/")
       val df = spark.read.parquet(paths: _*)
       val present = statCols.filter(df.columns.contains)
       val aggs = count(lit(1)).as("__rows") +:
@@ -241,7 +279,9 @@ object LayoutManifest {
         .agg(aggs.head, aggs.tail: _*)
         .collect().toSeq
         .map { r =>
-          val name = new Path(new java.net.URI(r.getString(0)).getPath).getName
+          val file = new java.net.URI(r.getString(0)).getPath
+          val name = roots.find(file.startsWith).map(file.stripPrefix)
+            .getOrElse(new Path(file).getName)
           val stats = present.flatMap { c =>
             val iLo = r.fieldIndex(s"${c}__min"); val iHi = r.fieldIndex(s"${c}__max")
             if (r.isNullAt(iLo) || r.isNullAt(iHi)) None
@@ -278,7 +318,7 @@ object LayoutManifest {
   /** Footer-only [[entriesFor]] — Some(entries) when the fast path is
     * valid for every file and every requested column, None to fall back.
     */
-  private[sources] def footerEntries(spark: SparkSession, paths: Seq[String],
+  private def footerEntries(spark: SparkSession, paths: Seq[String],
       statCols: Seq[String]): Option[Seq[FileEntry]] = {
     val f = fs(spark, paths.head)
     val files = flatParquetFiles(f, paths).getOrElse(return None)
@@ -302,7 +342,7 @@ object LayoutManifest {
             // tasks.foreach(_.get()) and abort bootstrap/commit/zoneMap
             // where the exact scan fallback handles the file fine
             val e = try footerEntry(conf, p, statCols)
-                    catch { case _: Throwable => None }
+                    catch { case NonFatal(_) => None }
             e match {
               case Some(fe) => entries.put(fe.name, fe)
               case None     => failed.set(true)
@@ -373,35 +413,6 @@ object LayoutManifest {
   /** Absolute path of a manifest-listed data file. */
   def dataPath(path: String, name: String): String =
     new Path(path, name).toString
-
-  /** The committed manifest as the zone-map DataFrame shape
-    * ([[Layout.zoneMap]]'s contract: `file` + `<col>_min`/`<col>_max` per
-    * stat column) — a local one-row-per-file frame, no scan. Files with an
-    * unknown span for a column carry NULL bounds; [[Layout]]'s prunes keep
-    * such files (no false negatives).
-    */
-  def statsDf(spark: SparkSession, path: String, m: Manifest,
-      statCols: Seq[String]): DataFrame = {
-    val rows = m.files.map { e =>
-      org.apache.spark.sql.Row.fromSeq(
-        dataPath(path, e.name) +: statCols.flatMap { c =>
-          e.stats.get(c) match {
-            case Some((lo, hi)) => Seq[Any](lo, hi)
-            case None           => Seq[Any](null, null)
-          }
-        })
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-      statCols.flatMap(c => Seq(
-        org.apache.spark.sql.types.StructField(s"${c}_min",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField(s"${c}_max",
-          org.apache.spark.sql.types.LongType, nullable = true))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
-  }
 
   /** Read exactly the files the current manifest lists (the isolated-reader
     * contract: a rewrite in progress — new files renamed in but not yet

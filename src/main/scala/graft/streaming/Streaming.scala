@@ -325,13 +325,9 @@ object Streaming {
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val m = graft.sources.LayoutManifest
-          .current(batch.sparkSession, outPath)
-          .getOrElse(throw new IllegalStateException(
-            s"no committed clustered layout at $outPath — clusteredWrite first"))
-        m.props.get("planes_hash").foreach(want => require(want == expected,
-          s"plane mismatch: layout at $outPath was written with hash $want, " +
-            s"maintenance stream carries $expected"))
+        graft.sources.LayoutManifest.requireIdentity(
+          graft.sources.LayoutManifest.committed(batch.sparkSession, outPath),
+          outPath, "planes_hash", expected, "plane")
         graft.sources.Layout.appendCommitted(
           graft.operators.AnnSearch.index(batch, col("embedding"), planes)
             .sortWithinPartitions("bucket"),
@@ -407,13 +403,9 @@ object Streaming {
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val m = graft.sources.LayoutManifest
-          .current(batch.sparkSession, outPath)
-          .getOrElse(throw new IllegalStateException(
-            s"no committed clustered layout at $outPath — clusteredWrite first"))
-        m.props.get("centroids_hash").foreach(want => require(want == expected,
-          s"centroid mismatch: layout at $outPath was written with hash " +
-            s"$want, maintenance stream carries $expected"))
+        graft.sources.LayoutManifest.requireIdentity(
+          graft.sources.LayoutManifest.committed(batch.sparkSession, outPath),
+          outPath, "centroids_hash", expected, "centroid")
         graft.sources.Layout.appendCommitted(
           graft.operators.IvfSearch.index(batch, col("embedding"), centroids)
             .sortWithinPartitions("list_id"),
@@ -864,12 +856,12 @@ object Streaming {
       checkpoint: String,
       queryName: String = "embedding_drift_monitor"): StreamingQuery = {
     val spark = reference.sparkSession
-    val statsDf = graft.operators.EmbedQc.referenceStats(reference, vec)
+    val refStats = graft.operators.EmbedQc.referenceStats(reference, vec)
     // materialize the d stat rows at start-up; rebuild as a LOCAL frame so
     // no per-batch plan reaches back into the reference scan
     val frozen = spark.createDataFrame(
-      spark.sparkContext.parallelize(statsDf.collect().toIndexedSeq, 1),
-      statsDf.schema)
+      spark.sparkContext.parallelize(refStats.collect().toIndexedSeq, 1),
+      refStats.schema)
     vectors.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
@@ -971,12 +963,14 @@ object Streaming {
 
   /** Streaming zone-map maintenance — the layout-tier analog of the index
     * maintenance screens above: each micro-batch lands in its own
-    * `batch_id` data partition AND contributes its per-file min/max rows
-    * to a manifest at the same time, so [[graft.sources.Layout.prunedRead]]
-    * keeps pruning at planning time over everything ever ingested without
-    * any manifest rebuild (the manifest for a batch is derived from that
-    * batch's files only — no rescan of history, the invariant that makes
-    * this viable at a 100 TB accumulated table).
+    * `batch_id` data partition AND contributes its per-file
+    * [[graft.sources.LayoutManifest.FileEntry]] rows (absolute file names)
+    * to a manifest table at the same time, so
+    * [[graft.sources.Layout.prunedRead]] over [[loadZoneMap]] keeps pruning
+    * at planning time over everything ever ingested without any manifest
+    * rebuild (the entries for a batch are derived from that batch's files
+    * only — no rescan of history, the invariant that makes this viable at
+    * a 100 TB accumulated table).
     *
     * Idempotence: both writes are batch-stamped dynamic-partition
     * overwrites — a retried batch replaces its own data partition and its
@@ -994,13 +988,17 @@ object Streaming {
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        import spark.implicits._
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(dataPath)
-        graft.sources.Layout
-          .zoneMap(batch.sparkSession, s"$dataPath/batch_id=$batchId", statCols)
+        val batchDir = s"$dataPath/batch_id=$batchId"
+        graft.sources.Layout.zoneMap(spark, batchDir, statCols)
+          .map(e => e.copy(name = graft.sources.LayoutManifest.dataPath(batchDir, e.name)))
+          .toDS()
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -1010,11 +1008,16 @@ object Streaming {
       }
       .start()
 
-  /** The maintained manifest, ready for [[graft.sources.Layout.prunedRead]]
-    * (file paths are absolute, so the batch partitioning is transparent).
+  /** The maintained manifest's entries, ready for
+    * [[graft.sources.Layout.prunedRead]] (file names are absolute, so any
+    * layout path resolves them and the batch partitioning is transparent).
     */
-  def loadZoneMap(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+  def loadZoneMap(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[graft.sources.LayoutManifest.FileEntry] = {
+    import spark.implicits._
     spark.read.parquet(path).drop("batch_id")
+      .as[graft.sources.LayoutManifest.FileEntry].collect().toSeq
+  }
 
   /** Session-window stats per user (native session_window operator): the
     * streaming twin of [[graft.operators.Relational.sessionize]] — state is

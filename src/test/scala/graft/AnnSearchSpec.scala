@@ -74,7 +74,7 @@ class AnnSearchSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), BigDecimal(r.getDouble(1))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP)))
-    val got = rows(AnnSearch.searchClustered(spark, manifest,
+    val got = rows(AnnSearch.searchClustered(spark, tmp, manifest,
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
     val want = rows(AnnSearch.search(
@@ -89,18 +89,18 @@ class AnnSearchSpec extends SparkSpec {
     val tmp10 = java.nio.file.Files.createTempDirectory("graft_ann_clust10").toString
     AnnSearch.clusteredWrite(embs, col("embedding"), planes10, tmp10, numFiles = 32)
     val man10 = Layout.zoneMap(spark, tmp10, Seq("bucket"))
-    val totalFiles = man10.count()
+    val totalFiles = man10.size
     val probes = AnnSearch
       .probeBuckets(AnnSearch.bucketOf(q, planes10), 10, radius = 1)
       .map(_.toLong)
-    val readFiles = Layout.prunedReadIn(spark, man10, "bucket", probes)
+    val readFiles = Layout.prunedReadIn(spark, tmp10, man10, "bucket", probes)
       .select(col("_metadata.file_path")).distinct().count()
     assert(readFiles >= 1 && readFiles <= 2L * probes.size,
       s"read $readFiles of $totalFiles files")
     assert(readFiles < totalFiles,
       s"probe read must skip files: read $readFiles of $totalFiles")
     // and the pruned+filtered result still equals the full-index search
-    val got10 = rows(AnnSearch.searchClustered(spark, man10,
+    val got10 = rows(AnnSearch.searchClustered(spark, tmp10, man10,
       col("vec_id").cast("string"), col("embedding"), q, planes10,
       k = 10, probeRadius = 1))
     val want10 = rows(AnnSearch.search(
@@ -124,7 +124,7 @@ class AnnSearchSpec extends SparkSpec {
         round(col("score"), 6).as("score"))
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
-    val got = rows(AnnSearch.searchClusteredBatch(spark, man,
+    val got = rows(AnnSearch.searchClusteredBatch(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), qs, planes,
       k = 5, probeRadius = 1))
     val want = rows(AnnSearch.searchBatch(
@@ -139,10 +139,10 @@ class AnnSearchSpec extends SparkSpec {
       AnnSearch.probeBuckets(
         AnnSearch.bucketOf(r.getSeq[Float](1), planes), 10, radius = 1)
     }.distinct.toSeq.map(_.toLong)
-    val readFiles = Layout.prunedReadIn(spark, man, "bucket", probeUnion)
+    val readFiles = Layout.prunedReadIn(spark, tmp, man, "bucket", probeUnion)
       .select(col("_metadata.file_path")).distinct().count()
-    assert(readFiles < man.count(),
-      s"batch probe read must skip files: read $readFiles of ${man.count()}")
+    assert(readFiles < man.size,
+      s"batch probe read must skip files: read $readFiles of ${man.size}")
   }
 
   test("deleteVectors: bucket-membership prune rewrites few files; survivors equal the filtered twin") {
@@ -169,7 +169,7 @@ class AnnSearchSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), BigDecimal(r.getDouble(1))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSeq
-    val got = rows(AnnSearch.searchClustered(spark, man,
+    val got = rows(AnnSearch.searchClustered(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
     val want = rows(AnnSearch.search(
@@ -191,19 +191,19 @@ class AnnSearchSpec extends SparkSpec {
       .repartitionByRange(4, col("bucket")).sortWithinPartitions("bucket")
       .write.mode("overwrite").parquet(tmp)
     val man = Layout.zoneMap(sp, tmp, Seq("bucket"))
-    assert(man.count() == 4)
+    assert(man.size == 4)
     // two present values far apart: exactly their two files read
-    val hit = Layout.prunedReadIn(sp, man, "bucket", Seq(4L, 154L))
+    val hit = Layout.prunedReadIn(sp, tmp, man, "bucket", Seq(4L, 154L))
     val spans = hit.select(col("_metadata.file_path")).distinct().count()
     assert(spans == 2)
     assert(hit.filter(col("bucket").isin(4L, 154L)).count() == 2)
     // an absent value inside a span still keeps its covering file (no
     // false negatives; the caller's row-level predicate then drops it)
-    val cover = Layout.prunedReadIn(sp, man, "bucket", Seq(27L))
+    val cover = Layout.prunedReadIn(sp, tmp, man, "bucket", Seq(27L))
     assert(cover.select(col("_metadata.file_path")).distinct().count() == 1)
     assert(cover.filter(col("bucket") === 27L).count() == 0)
     // no value in any span: zero files, schema preserved
-    val none = Layout.prunedReadIn(sp, man, "bucket", Seq(999L))
+    val none = Layout.prunedReadIn(sp, tmp, man, "bucket", Seq(999L))
     assert(none.count() == 0 && none.columns.toSeq == Seq("bucket", "v"))
   }
 
@@ -302,7 +302,7 @@ class AnnSearchSpec extends SparkSpec {
     val got = rows(AnnSearch.searchClusteredAt(spark, tmp,
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
-    val want = rows(AnnSearch.searchClustered(spark,
+    val want = rows(AnnSearch.searchClustered(spark, tmp,
       graft.sources.Layout.zoneMap(spark, tmp, Seq("bucket")),
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
@@ -333,7 +333,7 @@ class AnnSearchSpec extends SparkSpec {
     val planes = AnnSearch.hyperplanes(dim = 64, numPlanes = 10)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ann_cbd").toString
     AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 32)
-    val man = AnnSearch.loadManifest(spark, tmp)
+    val man = graft.sources.LayoutManifest.committed(spark, tmp).files
     val qsF = embs.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     // ADVICE r7: an array<double> batch crashed the old driver-side
@@ -345,10 +345,10 @@ class AnnSearchSpec extends SparkSpec {
         round(col("score"), 6).as("score"))
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
-    val gotD = rows(AnnSearch.searchClusteredBatch(spark, man,
+    val gotD = rows(AnnSearch.searchClusteredBatch(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), qsD, planes,
       k = 5, probeRadius = 1))
-    val gotF = rows(AnnSearch.searchClusteredBatch(spark, man,
+    val gotF = rows(AnnSearch.searchClusteredBatch(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), qsF, planes,
       k = 5, probeRadius = 1))
     assert(gotD == gotF && gotF.nonEmpty)
@@ -372,8 +372,8 @@ class AnnSearchSpec extends SparkSpec {
     // prune would mark essentially every file affected — the bloom prune
     // must name only the true holders plus fpp noise
     val spanAffected = {
-      val m = Layout.zoneMap(sp, tmp, Seq("vec_id"))
-      m.filter(col("vec_id_min") <= 44L && col("vec_id_max") >= 5L).count()
+      Layout.zoneMap(sp, tmp, Seq("vec_id"))
+        .count { e => val (lo, hi) = e.stats("vec_id"); lo <= 44L && hi >= 5L }
     }
     val tombIds = Seq(5L, 13L, 21L, 33L, 44L)
     val bloomAffected = Layout.bloomPrunedFiles(sp, tmp, "vec_id", tombIds).length

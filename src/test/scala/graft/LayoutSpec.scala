@@ -54,8 +54,8 @@ class LayoutSpec extends SparkSpec {
     li.repartitionByRange(8, col("l_partkey")).sortWithinPartitions("l_partkey")
       .write.mode("overwrite").parquet(sdir)
     def meanSpan(path: String, c: String): Double = {
-      val m = Layout.zoneMap(spark, path, Seq(c))
-      m.agg(avg(col(s"${c}_max") - col(s"${c}_min"))).head().getDouble(0)
+      val spans = Layout.zoneMap(spark, path, Seq(c)).map(_.stats(c))
+      spans.map { case (lo, hi) => (hi - lo).toDouble }.sum / spans.size
     }
     // the partkey-sorted layout leaves suppkey spans ~global (rows in a file
     // see every suppkey); z-order must cut the suppkey span while keeping
@@ -73,20 +73,19 @@ class LayoutSpec extends SparkSpec {
     val zdir = tmp("zonemap")
     Layout.zorderWrite(li, "l_partkey", "l_suppkey", zdir, numFiles = 8)
     val manifest = Layout.zoneMap(spark, zdir, Seq("l_partkey", "l_suppkey"))
-    assert(manifest.count() == 8)
+    assert(manifest.size == 8)
     // a selective partkey range must actually skip files on a z-ordered layout
-    val kept = manifest
-      .filter(col("l_partkey_min") <= 120 && col("l_partkey_max") >= 100)
-      .count()
+    val kept = manifest.count { e =>
+      val (lo, hi) = e.stats("l_partkey"); lo <= 120 && hi >= 100 }
     assert(kept < 8, s"no files pruned ($kept of 8 kept)")
-    val pruned = Layout.prunedRead(spark, manifest, "l_partkey", 100L, 120L)
+    val pruned = Layout.prunedRead(spark, zdir, manifest, "l_partkey", 100L, 120L)
       .filter(col("l_partkey").between(100, 120))
     val full = li.filter(col("l_partkey").between(100, 120))
     assert(pruned.count() == full.count())
     assert(pruned.agg(sum("l_quantity")).head().getDouble(0)
       == full.agg(sum("l_quantity")).head().getDouble(0))
     // range outside every file span -> empty result, schema intact
-    val empty = Layout.prunedRead(spark, manifest, "l_partkey", 1000000L, 2000000L)
+    val empty = Layout.prunedRead(spark, zdir, manifest, "l_partkey", 1000000L, 2000000L)
     assert(empty.count() == 0)
     assert(empty.schema.fieldNames.toSet == li.schema.fieldNames.toSet)
   }
@@ -126,10 +125,11 @@ class LayoutSpec extends SparkSpec {
       Seq(10000000L).toDF("doc_id"))
     assert(rw2 == 0 && d2 == 0L)
     assert(files() == after)
-    // the maintained-manifest path (production shape) deletes identically
-    val m = graft.sources.Layout.zoneMap(spark, dir, Seq("doc_id"))
+    // the first delete committed the bootstrapped manifest (production
+    // shape): later deletes resolve it and delete identically
+    assert(graft.sources.LayoutManifest.current(spark, dir).isDefined)
     val (_, rw3, d3) = graft.sources.Layout.deleteRows(spark, dir, "doc_id",
-      Seq(70L).toDF("doc_id"), knownManifest = Some(m))
+      Seq(70L).toDF("doc_id"))
     assert(rw3 == 1 && d3 == 1L)
     assert(spark.read.parquet(dir).filter(col("doc_id") === 70L).count() == 0L)
   }
@@ -159,13 +159,11 @@ class LayoutSpec extends SparkSpec {
       .head().getDecimal(0)
     assert(a == b)
     // cluster order restored: doc_id zone spans disjoint across files
-    val zm = Layout.zoneMap(spark, out, Seq("doc_id"))
-      .orderBy("doc_id_min").collect()
+    val zm = Layout.zoneMap(spark, out, Seq("doc_id")).map(_.stats("doc_id"))
+      .sortBy(_._1)
     zm.sliding(2).foreach {
-      case Array(lo, hi) =>
-        assert(lo.getLong(zm.head.fieldIndex("doc_id_max"))
-          < hi.getLong(zm.head.fieldIndex("doc_id_min")),
-          "doc_id zones overlap after clustered compaction")
+      case Seq(lo, hi) =>
+        assert(lo._2 < hi._1, "doc_id zones overlap after clustered compaction")
       case _ =>
     }
   }
@@ -190,11 +188,9 @@ class LayoutSpec extends SparkSpec {
       case _ =>
     }
     assert(spans.head._1 == 0L && spans.last._2 == 99L)
-    // statsDf is the zone-map shape prunedRead consumes
-    val sdf = LayoutManifest.statsDf(sp, dir, m0, Seq("k"))
-    assert(sdf.columns.toSeq == Seq("file", "k_min", "k_max"))
-    assert(Layout.prunedRead(sp, sdf, "k", 10L, 20L).count() == 25 ||
-      Layout.prunedRead(sp, sdf, "k", 10L, 20L)
+    // the manifest's entries are the zone map prunedRead consumes
+    assert(Layout.prunedRead(sp, dir, m0.files, "k", 10L, 20L).count() == 25 ||
+      Layout.prunedRead(sp, dir, m0.files, "k", 10L, 20L)
         .filter(col("k").between(10, 20)).count() == 11)
     // a second commit takes the next version; readers take the max
     val v1 = LayoutManifest.commit(sp, dir, m0.copy(version = m0.version + 1,
@@ -224,9 +220,8 @@ class LayoutSpec extends SparkSpec {
     val n = docs.count()
     val tomb = (50L until 60L).toDF("doc_id")
     def affectedOf(m: LayoutManifest.Manifest): Array[String] =
-      LayoutManifest.statsDf(sp, dir, m, Seq("doc_id"))
-        .filter(col("doc_id_min") <= 59L && col("doc_id_max") >= 50L)
-        .select("file").collect().map(_.getString(0))
+      m.files.filter { e => val (lo, hi) = e.stats("doc_id"); lo <= 59L && hi >= 50L }
+        .map(e => LayoutManifest.dataPath(dir, e.name)).toArray
 
     // ---- crash AFTER phase 1 (new files renamed in, manifest NOT committed)
     val snap0 = LayoutManifest.current(sp, dir).get
@@ -476,37 +471,74 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("prune guards: empty manifest throws a clear error; NULL spans are kept, never pruned") {
-    import org.apache.spark.sql.types._
+    import graft.sources.LayoutManifest.FileEntry
     val sp = spark
-    val schema = StructType(Seq(
-      StructField("file", StringType, nullable = false),
-      StructField("k_min", LongType, nullable = true),
-      StructField("k_max", LongType, nullable = true)))
-    val empty = sp.createDataFrame(
-      sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullspan").toString
     val e1 = intercept[IllegalArgumentException] {
-      Layout.prunedRead(sp, empty, "k", 0L, 10L)
+      Layout.prunedRead(sp, dir, Seq.empty, "k", 0L, 10L)
     }
     assert(e1.getMessage.contains("EMPTY manifest"))
     val e2 = intercept[IllegalArgumentException] {
-      Layout.prunedReadIn(sp, empty, "k", Seq(1L))
+      Layout.prunedReadIn(sp, dir, Seq.empty, "k", Seq(1L))
     }
     assert(e2.getMessage.contains("EMPTY manifest"))
     // a file with NULL bounds (stats unknown) must be KEPT by both prunes
     // and treated as affected by the delete prune — no false negatives
-    val dir = java.nio.file.Files.createTempDirectory("graft_nullspan").toString
     sp.range(10).select(col("id").as("k"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), sp.sparkContext.hadoopConfiguration)
     val file = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .head.getPath.toString
-    val nullSpan = sp.createDataFrame(
-      sp.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row(file, null, null)), 1), schema)
-    assert(Layout.prunedRead(sp, nullSpan, "k", 100L, 200L).count() == 10)
-    assert(Layout.prunedReadIn(sp, nullSpan, "k", Seq(999L)).count() == 10)
+      .head.getPath.getName
+    val nullSpan = Seq(FileEntry(file, 10L, Map.empty))
+    assert(Layout.prunedRead(sp, dir, nullSpan, "k", 100L, 200L).count() == 10)
+    assert(Layout.prunedReadIn(sp, dir, nullSpan, "k", Seq(999L)).count() == 10)
+    assert(Layout.filesSpanning(nullSpan, "k", Seq(999L)) == nullSpan)
+  }
+
+  test("file selection over a committed layout launches no Spark job") {
+    import graft.sources.LayoutManifest
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.TestBus
+    import testImplicits._
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_nojobs").toString
+    sp.range(400).select(col("id").as("k"), (col("id") % 7).as("v"))
+      .repartitionByRange(8, col("k")).sortWithinPartitions("k")
+      .write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(sp, dir, Seq("k"))
+    val m = LayoutManifest.current(sp, dir).get
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      TestBus.drain(sp.sparkContext); jobs.set(0)
+      val out = body
+      TestBus.drain(sp.sparkContext); (out, jobs.get())
+    }
+    sp.sparkContext.addSparkListener(counter)
+    try {
+      assert(jobsOf(sp.range(3).count())._2 >= 1, "the counter must see jobs")
+      // the selection itself is a plain filter over the manifest's entries
+      val (sel, selJobs) = jobsOf(Layout.filesSpanning(m.files, "k", Seq(10L, 390L)))
+      assert(selJobs == 0 && sel.size == 2, s"jobs=$selJobs files=${sel.size}")
+      // prunedReadIn launches nothing beyond the plain read of the files it keeps
+      val (_, plainJobs) = jobsOf(
+        sp.read.parquet(sel.map(e => LayoutManifest.dataPath(dir, e.name)): _*))
+      val (df, pruneJobs) = jobsOf(Layout.prunedReadIn(sp, dir, m.files, "k", Seq(10L, 390L)))
+      assert(pruneJobs == plainJobs, s"prunedReadIn: $pruneJobs jobs vs $plainJobs for the read")
+      assert(df.inputFiles.length == 2)
+      // the delete prune: ids no span holds select no file, so a delete of
+      // a local tombstone batch runs no job at all, by id or by cluster value
+      val ((total, rw, deleted), delJobs) =
+        jobsOf(Layout.deleteRows(sp, dir, "k", Seq(1000L, 2000L).toDF("k")))
+      assert(delJobs == 0 && total == 8 && rw == 0 && deleted == 0L, s"jobs=$delJobs")
+      val ((_, rwIn, _), inJobs) = jobsOf(Layout.deleteRowsIn(sp, dir, m, "k",
+        Seq(1000L), "k", Seq(1000L).toDF("k")))
+      assert(inJobs == 0 && rwIn == 0, s"jobs=$inJobs")
+    } finally sp.sparkContext.removeSparkListener(counter)
   }
 
   test("manifestStats: clustered layout reads tight disjoint spans; a scattered one reads full-range overlap") {
@@ -515,9 +547,8 @@ class LayoutSpec extends SparkSpec {
     import sp.implicits._
     val rows = sp.range(10000).select(col("id").as("k"), (col("id") * 3).as("v"))
     def stats(path: String): (Long, Double, Double, Long) = {
-      val m = Layout.manifestStats(Layout.zoneMap(sp, path, Seq("k")), "k")
-        .head()
-      (m.getLong(0), m.getDouble(1), m.getDouble(2), m.getLong(3))
+      val h = Layout.manifestStats(Layout.zoneMap(sp, path, Seq("k")), "k")
+      (h.nFiles, h.spanFracAvg, h.spanFracMax, h.overlapPairs)
     }
     val tidy = java.nio.file.Files.createTempDirectory("graft_mstats_c").toString
     rows.repartitionByRange(8, col("k")).sortWithinPartitions("k")
@@ -560,19 +591,14 @@ class LayoutSpec extends SparkSpec {
       Seq((0L, 5L), (null, null), (3L, 8L), (null, null)),
       // single file / empty-range
       Seq((4L, 4L)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("k_min",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("k_max",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    cases.zipWithIndex.foreach { case (spans, ci) =>
-      val rows = spans.zipWithIndex.map { case ((lo, hi), i) =>
-        org.apache.spark.sql.Row(f"f$i%03d", lo, hi)
+    import graft.sources.LayoutManifest.FileEntry
+    def entries(spans: Seq[(Any, Any)]): Seq[FileEntry] =
+      spans.zipWithIndex.map {
+        case ((lo: Long, hi: Long), i) => FileEntry(f"f$i%03d", 1L, Map("k" -> ((lo, hi))))
+        case (_, i) => FileEntry(f"f$i%03d", 1L, Map.empty)
       }
-      val m = sp.createDataFrame(sp.sparkContext.parallelize(rows, 1), schema)
-      val got = Layout.manifestStats(m, "k").head().getLong(3)
+    cases.zipWithIndex.foreach { case (spans, ci) =>
+      val got = Layout.manifestStats(entries(spans), "k").overlapPairs
       val defined = spans.zipWithIndex.collect {
         case ((lo: Long, hi: Long), i) => (i, lo, hi)
       }
@@ -587,10 +613,7 @@ class LayoutSpec extends SparkSpec {
     val rspans = Seq.fill(200) {
       val lo = rnd.nextInt(1000).toLong; (lo, lo + rnd.nextInt(200).toLong)
     }
-    val rrows = rspans.zipWithIndex.map { case ((lo, hi), i) =>
-      org.apache.spark.sql.Row(f"f$i%03d", lo, hi) }
-    val rm = sp.createDataFrame(sp.sparkContext.parallelize(rrows, 1), schema)
-    val rgot = Layout.manifestStats(rm, "k").head().getLong(3)
+    val rgot = Layout.manifestStats(entries(rspans), "k").overlapPairs
     val rwant = (for {
       ((alo, ahi), i) <- rspans.zipWithIndex; ((blo, bhi), j) <- rspans.zipWithIndex
       if i < j && alo <= bhi && blo <= ahi
@@ -635,6 +658,15 @@ class LayoutSpec extends SparkSpec {
     val w3 = sp.read.parquet(edir)
       .agg(min(col("ts")).cast("long"), max(col("ts")).cast("long")).head()
     assert(e3.size == 1 && e3.head.stats("ts") == ((w3.getLong(0), w3.getLong(1))))
+    // a hive-partitioned dir also takes the scan path; its entries are
+    // named relative to the dir, so they resolve for a pruned read
+    val pdir = tmp("footer_partitioned")
+    sp.range(40).select(col("id").as("k"), (col("id") % 2).as("p"))
+      .write.mode("overwrite").partitionBy("p").parquet(pdir)
+    val pe = LayoutManifest.entriesFor(sp, Seq(pdir), Seq("k"))
+    assert(pe.nonEmpty && pe.forall(_.name.matches("p=[01]/.*\\.parquet")))
+    assert(Layout.prunedRead(sp, pdir, pe, "k", 0L, 3L)
+      .filter(col("k").between(0L, 3L)).count() == 4)
   }
 
   test("bloom sidecar: banded dims size small files below large ones; distributed probe has no false negatives") {
